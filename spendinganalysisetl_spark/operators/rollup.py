@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spendinganalysisetl_spark.functions.scalars import revenue, round2
+from spendinganalysisetl_spark.functions.scalars import money_sum, revenue
 
 
 def lineitem_rollup(lineitem: DataFrame) -> DataFrame:
@@ -21,7 +21,7 @@ def lineitem_rollup(lineitem: DataFrame) -> DataFrame:
     return (
         lineitem.rollup("l_returnflag", "l_linestatus")
         .agg(
-            round2(F.sum(revenue())).alias("revenue"),
+            money_sum(revenue()).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
             F.grouping_id().alias("gid"),
         )
@@ -34,7 +34,7 @@ def lineitem_cube(lineitem: DataFrame) -> DataFrame:
     return (
         lineitem.cube("l_returnflag", "l_linestatus")
         .agg(
-            round2(F.sum(revenue())).alias("revenue"),
+            money_sum(revenue()).alias("revenue"),
             F.grouping_id().alias("gid"),
         )
         .repartition(1).sortWithinPartitions("gid", "l_returnflag", "l_linestatus")

@@ -7,27 +7,32 @@ report row by (begin_date, end_date). This module is the engine-native
 analog over the versioned parquet sink (sources/upsert.py), built on
 the stdlib HTTP server so the serving path adds no dependency.
 
-Query mapping (same as SURVEY's endpoint analysis):
-- ``GET /dates``          → the 2-column projection ``proj`` family
-  (S3): a column-pruned scan of only the key columns.
-- ``POST /dates/summary`` → the keyed point read (S2/S4): both key
-  predicates reach the parquet scan as PushedFilters, so a partitioned
-  100 TB sink prunes to one partition / row group.
+Query mapping:
+- ``GET /dates``          → the key columns of every report row.
+- ``POST /dates/summary`` → the one report row for a
+  (begin_date, end_date) key.
 
-Scale notes: each request is a keyed point read against the CURRENT
-sink version (readers resolve the ``_CURRENT`` pointer, so a MERGE
-committing mid-request can't serve a half-written table). The report
-table has one row per (begin,end) range — tiny by construction — so
-the driver-side collect is bounded at one row (summary) or the range
-count (dates). The HTTP handlers compile the sink scan ONCE PER SINK
-VERSION (``VersionedPlanCache``): every request still re-reads the
-``_CURRENT`` pointer (one tiny file read — pointer-fresh), but the
-expensive part of planning a point read — file listing + parquet
-schema resolution for the scan relation — reruns only when a MERGE
-moves the pointer. Against a 100 TB partitioned sink that listing is
-the dominant per-request cost, so caching it is what makes a
-Spark-backed endpoint answer in scan-prune time rather than
-metadata time.
+Both endpoints are answered from an in-memory snapshot of the CURRENT
+sink version (``VersionedPlanCache``). A committed version is an
+immutable ``v_*`` directory, so it is read with one Spark job the first
+time a request sees it; every later request at that version is a list
+walk (``/dates``) or a dict lookup (summary) and fires no Spark job.
+Every request still re-reads the ``_CURRENT`` pointer (one tiny file
+read), so a MERGE committing between requests is visible to the very
+next one, and a reply is always built from exactly one version.
+
+``list_date_ranges`` and ``range_summary`` are the same two endpoints
+as Spark plans — a column-pruned key projection, and a keyed point read
+whose predicates reach the parquet scan as PushedFilters — for callers
+that want a DataFrame rather than an HTTP reply.
+
+Scale notes: the report sink holds one row per key range, so a
+version's rows are small by construction, and ``/dates`` has to bring
+every key to the driver on every request anyway. The snapshot holds
+one version's rows on the driver — as many rows as a ``/dates`` reply
+has entries — and drops them when the pointer moves. A sink too
+large for the driver would be served by the Spark-side forms against a
+partitioned table instead.
 """
 
 from __future__ import annotations
@@ -36,7 +41,7 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from spendinganalysisetl_spark.sources.upsert import (
@@ -47,61 +52,58 @@ from spendinganalysisetl_spark.sources.upsert import (
 
 
 class VersionedPlanCache:
-    """The compiled scan relation for the live sink version.
+    """The rows of the live sink version, held in memory.
 
-    ``frame()`` re-resolves the ``_CURRENT`` pointer on every call (so
-    a MERGE committing between requests is visible immediately — the
-    pointer-fresh contract) but rebuilds the DataFrame only when the
+    ``snapshot()`` re-resolves the ``_CURRENT`` pointer on every call
+    (so a MERGE committing between requests is visible immediately —
+    the pointer-fresh contract) but reads the sink only when the
     pointer names a NEW version directory. ``plan_count`` counts those
-    rebuilds; tests pin "N requests at one version plan once"."""
+    reads; tests pin "N requests at one version read it once"."""
 
     def __init__(self, spark: SparkSession, sink: str):
         self._spark = spark
         self._sink = sink
         self._lock = threading.Lock()
         self._live_dir: str | None = None
-        self._frame: DataFrame | None = None
+        self._rows: list[Row] = []
+        self._by_key: dict[tuple, Row] = {}
         self.plan_count = 0
 
-    def frame(self) -> DataFrame:
+    def snapshot(self) -> tuple[list[Row], dict[tuple, Row]]:
+        """``(rows, by_key)`` of the live version: every row in scan
+        order, and the first row of each (begin_date, end_date) key."""
         # Resolve the pointer INSIDE the lock: two concurrent requests
         # straddling a MERGE commit could otherwise race — the thread
         # holding the older pointer enters the lock last and overwrites
-        # the newer cached frame, serving the stale version (and
-        # inflating plan_count) until a later request flips it back.
+        # the newer snapshot, serving the stale version (and inflating
+        # plan_count) until a later request flips it back.
         with self._lock:
             live = _resolve_data_dir(self._sink)
             if live != self._live_dir:
-                self._frame = self._spark.read.parquet(live)
+                rows = self._spark.read.parquet(live).collect()
+                by_key: dict[tuple, Row] = {}
+                for r in rows:
+                    by_key.setdefault((r["begin_date"], r["end_date"]), r)
+                self._rows, self._by_key = rows, by_key
                 self._live_dir = live
                 self.plan_count += 1
-            return self._frame
+            return self._rows, self._by_key
 
 
-def list_date_ranges(
-    spark: SparkSession, sink: str, reports: DataFrame | None = None
-) -> DataFrame:
+def list_date_ranges(spark: SparkSession, sink: str) -> DataFrame:
     """EP2 (``GET /dates``, reference main.py:15-44): every report key
     range in the sink — a key-columns-only projection (column pruning
     reaches the scan; see test_plan_audit for the projection family)."""
-    if reports is None:
-        reports = read_reports(spark, sink)
-    return reports.select(*KEY)
+    return read_reports(spark, sink).select(*KEY)
 
 
 def range_summary(
-    spark: SparkSession,
-    sink: str,
-    begin_date: str,
-    end_date: str,
-    reports: DataFrame | None = None,
+    spark: SparkSession, sink: str, begin_date: str, end_date: str
 ) -> DataFrame:
     """EP3 (``POST /dates/summary``, reference main.py:46-84): the one
     report row for a key range — both equality predicates push down to
     the parquet scan."""
-    if reports is None:
-        reports = read_reports(spark, sink)
-    return reports.filter(
+    return read_reports(spark, sink).filter(
         (F.col("begin_date") == begin_date) & (F.col("end_date") == end_date)
     )
 
@@ -122,13 +124,11 @@ class ReportServer:
     """Tiny threaded HTTP front-end for the two report endpoints.
 
     Start with ``serve_reports``; ``base_url`` gives the bound address
-    (port 0 → ephemeral). Handlers run Spark point reads per request
-    against the version-cached scan (``VersionedPlanCache``) — the
-    session is thread-safe for read-only queries."""
+    (port 0 → ephemeral). Handlers answer from the snapshot of the live
+    sink version (``VersionedPlanCache``); only the first request at a
+    new version runs a Spark job."""
 
     def __init__(self, spark: SparkSession, sink: str, port: int = 0):
-        self._spark = spark
-        self._sink = sink
         self.plan_cache = VersionedPlanCache(spark, sink)
         outer = self
 
@@ -149,11 +149,9 @@ class ReportServer:
                     self._reply(404, {"msg": "unknown endpoint"})
                     return
                 try:
-                    rows = list_date_ranges(
-                        outer._spark, outer._sink, reports=outer.plan_cache.frame()
-                    ).collect()
+                    rows, _ = outer.plan_cache.snapshot()
                     self._reply(
-                        200, {"dates": [r.asDict() for r in rows]}
+                        200, {"dates": [{k: r[k] for k in KEY} for r in rows]}
                     )
                 except Exception:
                     # reference behavior: errors collapse to a message
@@ -168,21 +166,20 @@ class ReportServer:
                     n = int(self.headers.get("Content-Length", "0"))
                     req = json.loads(self.rfile.read(n) or b"{}")
                     # TypeError covers valid-JSON non-objects ('null',
-                    # '[1]', '"x"') where subscripting isn't indexable.
-                    begin, end = req["begin_date"], req["end_date"]
+                    # '[1]', '"x"') where subscripting isn't indexable,
+                    # and non-string keys: a list would be unhashable in
+                    # the lookup, a number or null could never match.
+                    key = (req["begin_date"], req["end_date"])
+                    if not all(isinstance(k, str) for k in key):
+                        raise TypeError("date keys must be strings")
                 except (ValueError, KeyError, TypeError):
                     self._reply(400, {"msg": "begin_date and end_date required"})
                     return
                 try:
-                    rows = range_summary(
-                        outer._spark,
-                        outer._sink,
-                        begin,
-                        end,
-                        reports=outer.plan_cache.frame(),
-                    ).collect()
-                    if rows:
-                        self._reply(200, _row_to_json(rows[0]))
+                    _, by_key = outer.plan_cache.snapshot()
+                    row = by_key.get(key)
+                    if row is not None:
+                        self._reply(200, _row_to_json(row))
                     else:
                         # reference miss message (main.py:73-76)
                         self._reply(

@@ -22,7 +22,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# The cores this process may run on (its CPU affinity mask, which
+# os.cpu_count ignores); SPARK_GRAFT_CPUS overrides it.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
